@@ -1,10 +1,13 @@
 """CPU time and resident memory of this process and all its descendants
-(the Spark JVM and its Python workers), read from /proc."""
+(the Spark JVM and its Python workers), read from /proc, and the clean-up
+that stops them all."""
 
 from __future__ import annotations
 
 import os
+import signal
 import threading
+import time
 
 _TICK = os.sysconf("SC_CLK_TCK")
 _PAGE = os.sysconf("SC_PAGE_SIZE")
@@ -81,3 +84,56 @@ class PeakRss:
         self._stop.set()
         self._thread.join()
         self.peak = max(self.peak, tree_rss_bytes(self.root))
+
+
+def _alive(pid: int) -> bool:
+    fields = _stat_fields(pid)
+    return fields is not None and fields[0] not in ("Z", "X")
+
+
+def _wait_gone(pids, timeout_s: float) -> list[int]:
+    deadline = time.monotonic() + timeout_s
+    left = [p for p in pids if _alive(p)]
+    while left and time.monotonic() < deadline:
+        time.sleep(0.05)
+        left = [p for p in left if _alive(p)]
+    return left
+
+
+def stop_all(spark) -> None:
+    """Stop the Spark session, its JVM and every process this one started,
+    and wait until each has ended. The JVM exits by itself only after this
+    process does, so it is stopped here explicitly: first by closing its
+    stdin (it then runs its shutdown hooks), then by signals."""
+    me = os.getpid()
+    if spark is not None:
+        try:
+            spark.stop()
+        except Exception:
+            pass
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    proc = getattr(gateway, "proc", None)
+    # taken while the JVM lives: its children leave this tree when it exits
+    descendants = [p for p in tree_pids(me) if p != me]
+    if gateway is not None:
+        try:
+            gateway.shutdown()
+        except Exception:
+            pass
+    if proc is not None:
+        try:
+            proc.stdin.close()
+            proc.wait(timeout=30)
+        except Exception:
+            proc.kill()
+            proc.wait()
+    left = _wait_gone(descendants, 0)
+    for sig in (signal.SIGTERM, signal.SIGKILL):
+        for pid in left:
+            try:
+                os.kill(pid, sig)
+            except ProcessLookupError:
+                pass
+        left = _wait_gone(left, 10)

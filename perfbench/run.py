@@ -17,6 +17,7 @@ import glob
 import json
 import os
 import shutil
+import signal
 import sys
 import time
 import traceback
@@ -142,12 +143,15 @@ def _trace_overhead_pct(workload: str, seed: int, traced_pass_s: float) -> tuple
 
 def main(argv=None) -> int:
     args = _parse_args(argv)
+    # a termination request unwinds through the clean-up below
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(128 + signal.SIGTERM))
     run_id = f"{time.strftime('%Y%m%dT%H%M%S')}-{args.workload}-s{args.seed}-t{args.trace}"
     out_dir = os.path.join(STATE_DIR, "work", f"{run_id}-{uuid.uuid4().hex[:6]}")
     _prepare_env(out_dir)
     try:
         import aml_feature_store_spark  # noqa: F401
         import workloads as W
+        from procmon import stop_all
         from spans import Tracer, parse_event_logs
     except ImportError as e:
         shutil.rmtree(out_dir, ignore_errors=True)
@@ -204,8 +208,8 @@ def main(argv=None) -> int:
         traceback.print_exc()
         return 1
     finally:
-        if run.spark is not None:
-            run.spark.stop()
+        stop_all(run.spark)
+        run.spark = None
         shutil.rmtree(out_dir, ignore_errors=True)
 
     run.record.update(

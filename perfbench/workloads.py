@@ -49,6 +49,7 @@ class BatchWorkload:
 class StreamWorkload:
     shape: EventShape
     warm_files: int  # the first lands alone; the rest in an untimed warm-up window
+    warm_interval_s: float  # landing interval in the warm-up window
     file_interval_s: float
     lookup_rate: float  # requests per second
     lookup_threads: int
@@ -73,7 +74,8 @@ BATCH = {
 STREAM = {
     "stream_serve": StreamWorkload(
         shape=EventShape(20_000, hot_share=0.2),
-        warm_files=3,
+        warm_files=6,
+        warm_interval_s=2.0,
         file_interval_s=3.0,
         lookup_rate=1.0,
         lookup_threads=2,
@@ -451,7 +453,7 @@ def run_stream(run: Run) -> dict:
     rng = random.Random(run.seed)
     users = pq.read_table(run.path("inputs", "events.parquet"), columns=["user_id"])
     users = users.column("user_id").to_numpy()
-    n_warm_lookups = round(wl.lookup_rate * (wl.warm_files - 1) * wl.file_interval_s)
+    n_warm_lookups = round(wl.lookup_rate * (wl.warm_files - 1) * wl.warm_interval_s)
     n_lookups = max(1, round(wl.lookup_rate * run.seconds))
     lookup_ids = [
         int(users[rng.randrange(len(users))]) for _ in range(n_warm_lookups + n_lookups)
@@ -466,8 +468,10 @@ def run_stream(run: Run) -> dict:
             raise AssertionError(f"lookup({uid}) returned {len(rows)} rows")
         return len(rows)
 
-    def open_loops(t_begin: float, file_idx: list[int], req_idx: list[int], tag: str):
-        """Land ``file_idx`` every file_interval_s and send lookups
+    def open_loops(
+        t_begin: float, interval_s: float, file_idx: list[int], req_idx: list[int], tag: str
+    ):
+        """Land ``file_idx`` every ``interval_s`` and send lookups
         ``req_idx`` at lookup_rate from ``t_begin``; wait until every landed
         file is in the store. Returns landing times and lookup records."""
         landed: list[float] = []
@@ -477,7 +481,7 @@ def run_stream(run: Run) -> dict:
 
         def lander() -> None:
             for k, fi in enumerate(file_idx):
-                due = t_begin + k * wl.file_interval_s
+                due = t_begin + k * interval_s
                 time.sleep(max(0.0, due - time.perf_counter()))
                 _land(files[fi], src, fi)
                 landed.append(time.perf_counter())
@@ -518,11 +522,12 @@ def run_stream(run: Run) -> dict:
             time.sleep(0.05)
         return landed, lookups
 
-    # the first batches and lookups run cold: warm both loops untimed, on
-    # the same schedule as the timed window
+    # the first batches and lookups run cold, and for several files after
+    # the first they keep getting faster: warm both loops untimed, with
+    # files landing at about the stream's capacity
     open_loops(
-        time.perf_counter(), list(range(1, wl.warm_files)), list(range(n_warm_lookups)),
-        "warm-lookup",
+        time.perf_counter(), wl.warm_interval_s, list(range(1, wl.warm_files)),
+        list(range(n_warm_lookups)), "warm-lookup",
     )
     warm_batches = {p["batchId"] for p in query.recentProgress}
 
@@ -533,7 +538,7 @@ def run_stream(run: Run) -> dict:
         cpu0 = tree_cpu_s(os.getpid())
         with tr.span("run"):
             landed, lookups = open_loops(
-                t_begin,
+                t_begin, wl.file_interval_s,
                 list(range(wl.warm_files, n_files)),
                 list(range(n_warm_lookups, n_warm_lookups + n_lookups)),
                 "lookup",
