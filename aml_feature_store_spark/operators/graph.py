@@ -842,9 +842,9 @@ def hits(
 
 def _score_map(df: DataFrame, key: str, val) -> DataFrame:
     """One-row map<key → 1e12-lattice long> of a SMALL score frame —
-    broadcast into the per-iteration adjacency pass of the small-side
-    bipartite kernels. The floor is the same per-edge lattice snap the
-    generic kernels compute after their join; hoisting it to one row per
+    broadcast into the per-iteration adjacency pass of
+    :func:`hits_smallside`. The floor is the same per-edge lattice snap
+    the generic kernels compute after their join; hoisting it to one row per
     small-side node is exact because the snapped integer depends only on
     the node, never the edge."""
     return df.agg(
@@ -865,37 +865,46 @@ def pagerank_bipartite_smallside(
     `b` side — bit-identical to
     ``pagerank(edges.union(edges.reversed))`` (pytest-pinned equivalence)
     but structurally cheaper: the symmetrized edge list is never
-    materialized and NO per-iteration edge join runs. Instead the `a`-side
-    adjacency ``(a, [b...], outdeg)`` is grouped ONCE (one shuffle total),
-    and each iteration is
+    materialized and no edge join runs. The `a`-side adjacency
+    ``(a, [b...], outdeg)`` is grouped and checkpointed ONCE; every
+    later step is one pass over it.
 
-    - a-side update: broadcast the b-side's per-node lattice
-      contributions as a one-row map (the broadcast-join idiom, one row ×
-      |b| entries) and fold each adjacency array in-partition — zero
-      shuffle;
-    - b-side update: explode the adjacency with the per-`a` lattice
-      contribution and hash-aggregate — the shuffle carries only
-      |b| × n_partitions partial rows.
+    Two parity chains per adjacency pass. On a bipartite graph the
+    synchronous update never mixes sides: the a-ranks of iteration k read
+    only the b-ranks of iteration k-1 and vice versa, so the iterates
+    split into two independent chains, A₀→B₁→A₂→… and B₀→A₁→B₂→… . One
+    pass advances BOTH chains by two steps: each chain's b-side lattice
+    map (one value, |b| entries) is folded over every adjacency array
+    into that chain's a-rank inline (B→A, no shuffle); each `a` emits one
+    lattice weight per chain; and a single ``groupBy("b")`` sums both
+    (A→B) plus ``count(*)``, the b-degree the next maps divide by, so no
+    degree join runs. ``n_iters`` iterations cost one b-degree pass (it
+    also fixes |b|, hence the node count) plus ⌈n_iters/2⌉ chain passes;
+    an odd count's last pass advances only the chain that ends on B_n.
 
-    Per iteration that is ONE adjacency pass (r11): the a-side rank is a
-    pure expression of the previous b-side map, so it is folded INLINE in
-    the b-update scan and the big (a, bs) frame is never re-materialized
-    — only the |b|-row mb frame checkpoints each round (the r10 loop
-    paid two adjacency-scale passes plus a full-adjacency localCheckpoint
-    per round). At the 10M-event anchor (~150k users × 100 categories)
-    the generic kernel's two edge-join+agg phases are likewise avoided
-    (~14M join-probe rows per round).
+    The b-vector is carried through the driver as Arrow: each pass's
+    |b|-row result (b, degree, one rank per chain) comes back with one
+    ``toArrow`` action, and the next pass's maps are built from those
+    arrays as a one-row Arrow ``LocalRelation`` (``map_from_arrays``),
+    read as a scalar subquery. That is plan data: evaluating it runs no
+    Spark job, and the map reaches the executors inside the stage's
+    broadcast task binary.
 
-    Scale contract: the map broadcast bounds the small side the same way
-    a broadcast join bounds its build side — ~2M entries ≈ 32 MB. Above
+    Scale contract: the b side is bounded like a broadcast-join build
+    side. The degree pass collects at most ``max_small_side + 1`` rows
+    (default 2M: ~16 MB per 8-byte Arrow column), and the vector crosses
+    py4j only as Arrow buffers, never per element in Python. Above
     ``max_small_side`` the function falls back to the generic
     :func:`pagerank`, which has no small-side requirement. The exact
-    arithmetic is the generic kernel's unchanged (per-edge
-    floor(rank/outdeg·1e12+0.5) snaps, order-independent long sums,
-    12-dp per-iteration resync), so the unrolled-CTE DuckDB oracle of
-    `pagerank_bipartite` applies verbatim.
+    arithmetic is the generic kernel's unchanged, all of it Spark
+    expressions: per-edge floor(rank/outdeg·1e12+0.5) snaps,
+    order-independent long sums, 12-dp per-iteration resync. So the
+    unrolled-CTE DuckDB oracle of `pagerank_bipartite` applies verbatim.
     """
-    edges = edges.select("a", "b").localCheckpoint(eager=True)
+    import numpy as np
+    import pyarrow as pa
+
+    spark = edges.sparkSession
     adj = (
         edges.groupBy("a")
         .agg(
@@ -904,98 +913,107 @@ def pagerank_bipartite_smallside(
         )
         .localCheckpoint(eager=True)
     )
-    bdeg = (
-        edges.groupBy("b")
-        .agg(F.count(F.lit(1)).alias("outdeg"))
-        .localCheckpoint(eager=True)
+    # a plain count, not DataFrame.observe: on Spark 4.1 the first
+    # Observation makes the session unserializable, which breaks later
+    # Spark ML fits in the same session (their models capture it)
+    n_a = adj.count()
+    if n_a == 0:
+        return adj.select(
+            F.col("a").alias("node"), F.lit(0.0).alias("pagerank")
+        )
+    degrees = (
+        adj.select(F.explode("bs").alias("b"))
+        .groupBy("b")
+        .agg(F.count(F.lit(1)).alias("deg"))
+        .limit(max_small_side + 1)
+        .toArrow()
     )
-    n_a, n_b = adj.count(), bdeg.count()
+    n_b = degrees.num_rows
     if n_b > max_small_side:
         sym = edges.select(
             F.col("a").alias("src"), F.col("b").alias("dst")
         ).union(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
         return pagerank(sym, n_iters=n_iters, damping=damping)
     n = n_a + n_b
-    if n == 0:
-        return adj.select(F.col("a").alias("node")).withColumn(
-            "pagerank", F.lit(0.0)
-        )
     base = (1.0 - damping) / n
-    lattice = lambda r: F.floor(  # noqa: E731  — the generic per-edge snap
-        F.col(r) / F.col("outdeg") * F.lit(1e12) + F.lit(0.5)
+    # the generic kernel's arithmetic, each Column built once for every pass
+    lattice = lambda r, d: F.floor(  # noqa: E731  — the per-edge snap
+        r / d * F.lit(1e12) + F.lit(0.5)
     )
-    rank_of = lambda c: F.round(  # noqa: E731
-        F.lit(base)
-        + F.lit(damping) * (F.col(c).cast("double") / F.lit(1e12)),
-        12,
+    rank_of = lambda s: F.round(  # noqa: E731  — the 12-dp resync
+        F.lit(base) + F.lit(damping) * (s.cast("double") / F.lit(1e12)), 12
     )
-    fold_bs = F.aggregate(  # Σ over bs of the broadcast map's lattice entries
-        "bs",
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + F.element_at(F.col("_m"), x),
+    fold = lambda m: F.aggregate(  # noqa: E731  — Σ over bs of a map's entries
+        "bs", F.lit(0).cast("long"), lambda acc, x: acc + F.element_at(m, x)
     )
-    # r11 optimization (guide §2.4/§5): the a-side rank is a PURE
-    # EXPRESSION of the previous b-side map — rank_of(fold(bs, bmap)) —
-    # so the big (a, bs) frame is never re-materialized with rank
-    # columns. Only the |b|-row mb frame is checkpointed per iteration;
-    # each iteration is ONE adjacency pass (the old loop paid two
-    # adjacency-scale passes PLUS a full-adjacency localCheckpoint per
-    # round). mb_k consumes ua_{k-1}.r = rank_of(fold(bs, map(mb_{k-2}))),
-    # evaluated inline in the same scan — identical double arithmetic to
-    # the materialized column, bit-equal (pytest-pinned vs the generic
-    # kernel).
-    # only mb_{k-2}, mb_{k-1} and the final frame are ever read, so the
-    # loop keeps a two-slot window instead of the full history (r12): a
-    # dropped reference lets the ContextCleaner release that iteration's
-    # checkpoint blocks instead of pinning n_iters |b|-row snapshots in
-    # executor storage for the whole build.
-    mb_prev2 = None  # mb_{k-2} while building mb_k
-    mb_prev1 = bdeg.withColumn("r", F.lit(1.0 / n))  # mb_0 = uniform init
-    for k in range(1, n_iters + 1):
-        if k == 1:
-            src = adj.withColumn("_r", F.lit(1.0 / n))
-        else:
-            bmap_prev = _score_map(mb_prev2, "b", lattice("r"))
-            src = adj.crossJoin(F.broadcast(bmap_prev)).withColumn(
-                "_r",
-                F.round(
-                    F.lit(base)
-                    + F.lit(damping) * (fold_bs.cast("double") / F.lit(1e12)),
-                    12,
-                ),
+    # chain "o" holds B₁, B₃, …; chain "e" holds B₀, B₂, …
+    chains = ("o", "e")
+    a_rank = {c: rank_of(fold(F.col("_m" + c))) for c in chains}
+    a_weight = {
+        c: lattice(a_rank[c], F.col("outdeg")).alias("_w" + c) for c in chains
+    }
+    a0_weight = lattice(F.lit(1.0 / n), F.col("outdeg")).alias("_wo")  # A₀
+    b_map = {
+        c: F.map_from_arrays("b", F.zip_with("r" + c, "deg", lattice))
+        for c in chains
+    }
+    b_sum = {c: F.sum("_w" + c).alias("_s" + c) for c in chains}
+    b_rank = {c: rank_of(F.col("_s" + c)).alias("r" + c) for c in chains}
+
+    # chain "e" starts at B₀ = 1/n; chain "o" starts at A₀ = 1/n and has
+    # no b-state before its first pass. Chains advanced by one pass share
+    # its result table, so every pass reads a single state table.
+    state = {"e": degrees.append_column("re", pa.array(np.full(n_b, 1.0 / n)))}
+
+    def maps(cs) -> list:
+        """The b-side lattice maps of chains ``cs`` as scalar subqueries
+        over one Arrow row (one list cell per state column): plan data,
+        so reading them runs no Spark job."""
+        if not cs:
+            return []
+        table = state[cs[0]]
+        offsets = pa.array([0, table.num_rows], pa.int32())
+        row = pa.table(
+            {
+                k: pa.ListArray.from_arrays(offsets, table.column(k).combine_chunks())
+                for k in ("b", "deg", *("r" + c for c in cs))
+            }
+        )
+        row = spark.createDataFrame(row)
+        return [row.select(b_map[c]).scalar().alias("_m" + c) for c in cs]
+
+    for k in range((n_iters + 1) // 2):
+        cs = chains if 2 * (k + 1) <= n_iters else ("o",)
+        result = (
+            adj.select("bs", "outdeg", *maps([c for c in cs if c in state]))
+            # the weights are projected BEFORE the explode: one fold per
+            # `a`, not one per edge
+            .select(
+                "bs", *(a_weight[c] if c in state else a0_weight for c in cs)
             )
-        mb_k = (
-            src.select(
-                F.floor(
-                    F.col("_r") / F.col("outdeg") * F.lit(1e12) + F.lit(0.5)
-                ).alias("_w"),
-                F.explode("bs").alias("b"),
-            )
+            .select(*("_w" + c for c in cs), F.explode("bs").alias("b"))
             .groupBy("b")
-            .agg(F.sum("_w").alias("_c"))
-            .join(F.broadcast(bdeg), "b")
-            .select("b", "outdeg", rank_of("_c").alias("r"))
-            .localCheckpoint(eager=True)
+            .agg(F.count(F.lit(1)).alias("deg"), *(b_sum[c] for c in cs))
+            .select("b", "deg", *(b_rank[c] for c in cs))
+            .toArrow()
         )
-        mb_prev2, mb_prev1 = mb_prev1, mb_k
-    mb = mb_prev1
+        state.update((c, result) for c in cs)
+    # chain `last` ends on B_n; A_n is the fold of the other chain's B_{n-1}
+    last, prev = ("e", "o") if n_iters % 2 == 0 else ("o", "e")
     if n_iters == 0:
-        ua = adj.withColumn("r", F.lit(1.0 / n))
+        ua = adj.select("a", F.lit(1.0 / n).alias("r"))
     else:
-        bmap_final = _score_map(mb_prev2, "b", lattice("r"))
-        ua = adj.crossJoin(F.broadcast(bmap_final)).select(
-            "a",
-            F.round(
-                F.lit(base)
-                + F.lit(damping) * (fold_bs.cast("double") / F.lit(1e12)),
-                12,
-            ).alias("r"),
+        ua = adj.select("a", "bs", *maps([prev])).select(
+            "a", a_rank[prev].alias("r")
         )
+    ub = spark.createDataFrame(
+        state[last].select(["b", "r" + last]).rename_columns(["b", "r"])
+    )
     out = lambda df, key: df.select(  # noqa: E731
         F.col(key).alias("node"),
         (F.round(F.col("r"), 9) + F.lit(0.0)).alias("pagerank"),
     )
-    return out(ua, "a").union(out(mb, "b"))
+    return out(ua, "a").union(out(ub, "b"))
 
 
 def hits_smallside(

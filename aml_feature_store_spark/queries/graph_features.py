@@ -330,7 +330,14 @@ def pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     is bounded like a broadcast-join build side) — bit-identical to the
     generic symmetrized pagerank (pytest-pinned), 0.61× its wall at the
     10M anchor in an interleaved A/B (31.1 → 18.9 s): no symmetrized edge
-    materialization, no per-iteration edge join."""
+    materialization, no per-iteration edge join. The kernel advances the
+    graph's two parity chains (A₀→B₁→A₂→… and B₀→A₁→B₂→…) together, two
+    iterations per pass over the user-side adjacency, and carries the
+    prop_k-side score vector through the driver as Arrow between passes:
+    8 iterations are one adjacency checkpoint, one degree pass and four
+    chain passes. Scale contract: the prop_k side is collected to the
+    driver, so above ``max_small_side`` (2M) nodes the kernel falls back
+    to the generic pagerank."""
     from ..operators.graph import pagerank_bipartite_smallside
 
     df = load_table(spark, sf_dir, "events")

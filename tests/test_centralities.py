@@ -274,13 +274,26 @@ def test_masked_bfs_equals_row_bfs_random_graph(spark):
     assert [f.name for f in empty.schema.fields] == ["root", "node", "dist"]
 
 
-def test_pagerank_smallside_equals_generic_random_bipartite(spark):
+def _random_bipartite(spark):
+    import numpy as np
+
+    rng = np.random.default_rng(10)
+    pairs = {
+        (int(a), -int(b) - 1)
+        for a, b in zip(rng.integers(0, 300, 1500), rng.integers(0, 25, 1500))
+    }
+    return spark.createDataFrame(sorted(pairs), "a long, b long")
+
+
+@pytest.mark.parametrize("n_iters", [0, 1, 2, 3, 8])
+def test_pagerank_smallside_equals_generic_random_bipartite(spark, n_iters):
     """pagerank_bipartite_smallside is BIT-equal (==, not approx) to the
     generic pagerank over the symmetrized edge list — the structural
-    rewrite (adjacency arrays + one-row broadcast score map + explode
-    partial-agg) may not change a single 12-dp intermediate. Also pins
-    the max_small_side fallback path to the same rows."""
-    import numpy as np
+    rewrite (two parity chains per adjacency pass, b-vector carried
+    through the driver as Arrow, explode partial-agg) may not change a
+    single 12-dp intermediate. Odd counts end on an unpaired pass that
+    advances one chain; 0 is the uniform start. Also pins the
+    max_small_side fallback path and an empty edge frame."""
     from pyspark.sql import functions as F
 
     from aml_feature_store_spark.operators.graph import (
@@ -288,29 +301,50 @@ def test_pagerank_smallside_equals_generic_random_bipartite(spark):
         pagerank_bipartite_smallside,
     )
 
-    rng = np.random.default_rng(10)
-    pairs = {
-        (int(a), -int(b) - 1)
-        for a, b in zip(rng.integers(0, 300, 1500), rng.integers(0, 25, 1500))
-    }
-    base = spark.createDataFrame(sorted(pairs), "a long, b long")
-    sym = base.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
-        base.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    )
-    generic = sorted(map(tuple, pagerank(sym, n_iters=8).collect()))
-    small = sorted(
-        map(tuple, pagerank_bipartite_smallside(base, n_iters=8).collect())
-    )
+    def sym(edges):
+        return edges.select(
+            F.col("a").alias("src"), F.col("b").alias("dst")
+        ).union(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    base = _random_bipartite(spark)
+    generic = rows(pagerank(sym(base), n_iters=n_iters))
+    small = rows(pagerank_bipartite_smallside(base, n_iters=n_iters))
     assert small == generic and len(small) > 300
-    fallback = sorted(
-        map(
-            tuple,
-            pagerank_bipartite_smallside(
-                base, n_iters=8, max_small_side=1
-            ).collect(),
-        )
+    fallback = rows(
+        pagerank_bipartite_smallside(base, n_iters=n_iters, max_small_side=1)
     )
     assert fallback == generic
+    empty = spark.createDataFrame([], "a long, b long")
+    out = pagerank_bipartite_smallside(empty, n_iters=n_iters)
+    assert rows(out) == rows(pagerank(sym(empty), n_iters=n_iters)) == []
+    assert out.columns == ["node", "pagerank"]
+
+
+def test_pagerank_smallside_job_count(spark):
+    """The eager Spark jobs pagerank_bipartite_smallside launches while
+    building its plan: the adjacency checkpoint and its count, one
+    b-degree pass and four two-chain passes for 8 iterations, two jobs
+    each."""
+    import uuid
+
+    from aml_feature_store_spark.operators.graph import (
+        pagerank_bipartite_smallside,
+    )
+
+    base = _random_bipartite(spark)
+    sc = spark.sparkContext
+    group = f"pagerank-smallside-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "pagerank_bipartite_smallside build")
+    try:
+        pagerank_bipartite_smallside(base, n_iters=8)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 20, len(jobs)
 
 
 def test_hits_smallside_equals_generic_random_bipartite(spark):

@@ -60,7 +60,8 @@ def test_trailing_multiwindow_single_shuffle(spark, qs):
     plan = _plan(qs["trailing_multiwindow_features"](spark, SF))
     assert _nodes(plan, "Exchange") == 1
     assert _nodes(plan, "Sort") == 1  # one sort feeds all three frames
-    assert _nodes(plan, "Window") == 3
+    # the frames are built in one selectExpr, so they share one WindowExec
+    assert _nodes(plan, "Window") == 1
 
 
 def test_trailing_reads_only_needed_columns(spark, qs):

@@ -85,6 +85,36 @@ def test_selectexpr_spelling_equals_column_spelling(spark):
         )
 
 
+def test_backtick_in_column_names(spark):
+    """Identifiers are quoted for selectExpr with embedded backticks
+    doubled: an entity or distinct column whose name contains a backtick
+    gives the same output as the unrenamed run."""
+    rows = [(0, 1, 10.0), (30, 1, 20.0), (3601, 1, 40.0), (10, 2, 5.0)]
+    df = _mk(spark, rows).withColumn(
+        "event_type", (F.col("event_id") % 2).cast("string")
+    )
+    spec = TrailingWindowSpec(
+        windows={"1h": 3600, "24h": 86400}, distinct_cols=("event_type",)
+    )
+    ref = trailing_features(df, spec)
+    odd = {"user_id": "user`id", "event_type": "event``type"}
+    renamed = trailing_features(
+        df.withColumnsRenamed(odd),
+        TrailingWindowSpec(
+            entity_col=odd["user_id"],
+            windows=spec.windows,
+            distinct_cols=(odd["event_type"],),
+        ),
+    )
+    back = {v: k for k, v in odd.items()}
+    back.update(
+        {f"unique_{odd['event_type']}_{w}": f"unique_event_type_{w}" for w in spec.windows}
+    )
+    renamed = renamed.withColumnsRenamed(back)
+    assert renamed.columns == ref.columns
+    assert sorted(map(tuple, renamed.collect())) == sorted(map(tuple, ref.collect()))
+
+
 def test_trailing_counts_and_sums(spark):
     # user 1: events at t=0, 30s, 3601s. 1h window at the 3rd event must
     # include only events within [ts-3600s, ts] → itself + t=30s event.

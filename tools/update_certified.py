@@ -29,8 +29,11 @@ import ast
 import glob
 import json
 import os
+import re
 import subprocess
 import sys
+
+ROUND_SUBJECT = re.compile(r"^round \d+:")
 
 
 def latest_certified(root: str) -> dict[str, int]:
@@ -119,7 +122,7 @@ def _latest_round_commit(root: str) -> str | None:
         return None
     for line in out.splitlines():  # newest first
         sha, _, subj = line.partition(" ")
-        if subj.startswith("round ") and ":" in subj:
+        if ROUND_SUBJECT.match(subj):
             return sha
     return None
 
