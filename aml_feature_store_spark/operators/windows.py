@@ -205,8 +205,7 @@ def trailing_sums_scalable(
     u = real.unionByName(shadows)
     bucketized = hot_buckets is not None and bool(hot_buckets.ents)
     if bucketized:
-        skey = _hot_cache_key(df, spec, hot_buckets)
-        carry = _hot_carry_literals(df, spec, hot_buckets, key=skey)
+        carry = _hot_carry_literals(df, spec, hot_buckets)
         u = u.withColumn("_b", _bucket_expr(hot_buckets))
         w = (
             Window.partitionBy("_ent", "_b")
@@ -226,12 +225,7 @@ def trailing_sums_scalable(
     if bucketized:
         # stitch the bucket-prefix carry (coalesced — every downstream
         # read of _cum_s already coalesces empty frames to 0)
-        sums = _STITCH_CACHE.get(("sums", skey)) if skey is not None else None
-        if sums is None:
-            sums = _carry_sum_exprs(hot_buckets, carry)
-            if skey is not None:
-                _cache_put(_STITCH_CACHE, ("sums", skey), sums, _CARRY_CACHE_CAP)
-        cy_s, cy_n, _ = sums
+        cy_s, cy_n, _ = _carry_sum_exprs(hot_buckets, carry)
         cs = F.coalesce(cs, F.lit(0).cast(_SUM_T)) + cy_s
         cn = cn + cy_n
     cum = u.select(
@@ -313,61 +307,6 @@ def _bucket_expr(hb: HotBucketSpec) -> Column:
     )
 
 
-_HOT_CARRY_CACHE: dict[tuple, dict] = {}
-_STITCH_CACHE: dict[tuple, object] = {}
-
-# Session-memoization bounds (the caches' intent is "pay the stats job /
-# literal fold once per repeated query over a static input", not an
-# unbounded store: carry dicts hold buckets-length arrays per entity and
-# stitch entries hold large Column trees). FIFO eviction — insertion
-# order is recency enough for per-session reuse patterns.
-_STATS_CACHE_CAP = 32
-_CARRY_CACHE_CAP = 8
-
-
-def _cache_put(cache: dict, key, val, cap: int) -> None:
-    while len(cache) >= cap and key not in cache:
-        cache.pop(next(iter(cache)))
-    cache[key] = val
-
-
-def clear_plan_caches() -> None:
-    """Drop every memoized routing statistic, carry fold, and stitch
-    Column tree. The cache keys include each input file's (size, mtime)
-    for local files, so plain dataset regeneration invalidates naturally;
-    call this only after an in-place rewrite the listing cannot see
-    (e.g. an object-store overwrite preserving sizes)."""
-    _HOT_CARRY_CACHE.clear()
-    _STITCH_CACHE.clear()
-    _FRAME_EST_CACHE.clear()
-    _HOT_CUTS_CACHE.clear()
-
-
-def _files_sig(df: DataFrame) -> tuple:
-    """Cache signature of the plan's input files: (path, size, mtime_ns)
-    per file, so data rewritten AT THE SAME PATHS within a driver session
-    (INSERT OVERWRITE, regenerated .scale datasets) invalidates the
-    memoized stats/carries instead of silently reusing stale values.
-    Non-local URIs fall back to path-only entries (object stores write
-    immutable objects in practice; see :func:`clear_plan_caches`)."""
-    try:
-        files = sorted(df.inputFiles())
-    except Exception:
-        return ()
-    sig = []
-    for p in files:
-        parsed = urlparse(p)
-        if parsed.scheme in ("file", ""):
-            try:
-                st = os.stat(parsed.path or p)
-                sig.append((p, st.st_size, st.st_mtime_ns))
-                continue
-            except OSError:
-                pass
-        sig.append((p, -1, -1))
-    return tuple(sig)
-
-
 def _jdiv(a: int, b: int) -> int:
     """Integer division with Spark/SQL ``div`` semantics (truncation
     toward zero). Python ``//`` floors, which diverges on negative
@@ -379,44 +318,21 @@ def _jdiv(a: int, b: int) -> int:
     return q if (a >= 0) == (b >= 0) else -q
 
 
-def _hot_cache_key(
-    df: DataFrame, spec: TrailingWindowSpec, hb: HotBucketSpec
-) -> tuple | None:
-    """Shared memoization key for the carry fold AND the stitch Column
-    trees (building ~30 literal-array Columns costs >1 s of py4j per
-    plan build — Columns are immutable expression trees, safe to reuse
-    across plans)."""
-    files = _files_sig(df)
-    if not files:
-        return None
-    return (
-        files,
-        spec.entity_col,
-        spec.ts_col,
-        spec.amount_col,
-        tuple(spec.windows.items()),
-        tuple(spec.distinct_cols),
-        hb.buckets,
-        tuple(sorted((str(k), v) for k, v in hb.ents.items())),
-    )
-
-
 def _hot_carry_literals(
     df: DataFrame,
     spec: TrailingWindowSpec,
     hb: HotBucketSpec,
-    key: tuple | None = None,
 ) -> dict:
     """Cross-bucket carry state of the bucketized scalable plan, folded
     on the driver from ONE hot-filtered aggregate (plus one marker
-    aggregate when the spec has distinct columns) and memoized per input
-    files. Bounded by construction: per hot entity, ``buckets`` running
-    sums plus, per window, the extrema of the single chunk crossing each
-    bucket edge (a chunk is an interval, so exactly one chunk contains
-    any given edge). The collect is ≤ (hot entities × buckets × chunks
-    of the narrowest window intersected per bucket) rows — at warehouse
-    scale cap the span/window ratio or raise ``buckets`` width, never
-    unbounded in the table size.
+    aggregate when the spec has distinct columns). Bounded by
+    construction: per hot entity, ``buckets`` running sums plus, per
+    window, the extrema of the single chunk crossing each bucket edge (a
+    chunk is an interval, so exactly one chunk contains any given edge).
+    The collect is ≤ (hot entities × buckets × chunks of the narrowest
+    window intersected per bucket) rows — at warehouse scale cap the
+    span/window ratio or raise ``buckets`` width, never unbounded in the
+    table size.
 
     Exactness: DECIMAL sums are folded with ``decimal.Decimal`` (exact,
     associative — bit-equal to any grouping); counts/markers are ints;
@@ -445,10 +361,6 @@ def _hot_carry_literals(
     a driver OOM risk at exactly the scale this machinery targets."""
     from decimal import Decimal
 
-    if key is None:
-        key = _hot_cache_key(df, spec, hb)
-    if key is not None and key in _HOT_CARRY_CACHE:
-        return _HOT_CARRY_CACHE[key]
     nb = hb.buckets
     hot_ids = list(hb.ents)
     ms = _ms(spec.ts_col)
@@ -618,8 +530,6 @@ def _hot_carry_literals(
                 mk[tag] = arr
         out[ent] = {"s": s_arr, "n": n_arr, "s2": s2_arr, "ext": ext, "mk": mk}
     out["__amt_t"] = amt_t
-    if key is not None:
-        _cache_put(_HOT_CARRY_CACHE, key, out, _CARRY_CACHE_CAP)
     return out
 
 
@@ -792,9 +702,8 @@ def trailing_features_scalable(
     cross-bucket state is bounded — ≤ buckets running sums per entity,
     plus per window the one chunk that crosses each bucket edge — so it
     is computed ONCE at plan build by a driver-side fold over one
-    hot-filtered aggregate (memoized per input files, like the routing
-    stats) and stitched back as LITERAL array lookups keyed by the
-    bucket id:
+    hot-filtered aggregate and stitched back as LITERAL array lookups
+    keyed by the bucket id:
 
     - cumulative sums/counts/markers: ``local + exclusive_prefix[b]``
       (exact ``decimal.Decimal``/int addition on the driver — DECIMAL
@@ -914,8 +823,7 @@ def trailing_features_scalable(
     ]
     bucketized = hot_buckets is not None and bool(hot_buckets.ents)
     if bucketized:
-        skey = _hot_cache_key(df, spec, hot_buckets)
-        carry = _hot_carry_literals(df, spec, hot_buckets, key=skey)
+        carry = _hot_carry_literals(df, spec, hot_buckets)
         u = u.withColumn("_b", _bucket_expr(hot_buckets))
         u = u.repartition("_ent", "_b")
         part = ["_ent", "_b"]
@@ -957,12 +865,7 @@ def trailing_features_scalable(
         cols[f"_smn_{wname}"] = F.min("_amt").over(desc)
     cum = u.withColumns(cols)
     if bucketized:
-        glob = _STITCH_CACHE.get(("full", skey)) if skey is not None else None
-        if glob is None:
-            glob = _stitch_exprs(spec, hot_buckets, carry, tags)
-            if skey is not None:
-                _cache_put(_STITCH_CACHE, ("full", skey), glob, _CARRY_CACHE_CAP)
-        cum = cum.withColumns(glob)
+        cum = cum.withColumns(_stitch_exprs(spec, hot_buckets, carry, tags))
     cum = cum.filter(F.col("_win").isNull() | (F.col("_win") != "__mk"))
 
     isreal = F.col("_win").isNull()
@@ -1115,9 +1018,6 @@ AUTO_FRAME_ROWS_THRESHOLD = 32
 HOT_TASK_ROWS_THRESHOLD = 100_000
 HOT_BUCKETS = 64
 
-_FRAME_EST_CACHE: dict[tuple, float] = {}
-_HOT_CUTS_CACHE: dict[tuple, "HotBucketSpec | None"] = {}
-
 # Above this much input, the routing stats passes run on a seeded 1% ROW
 # sample instead of the full table (the full groupBy(entity) pass is one
 # cheap job at anchor scale but a real cost at warehouse scale). Row- —
@@ -1136,16 +1036,31 @@ STATS_SAMPLE_SEED = 73
 _STATS_SAMPLE_MIN_ROWS = 8
 
 
+def _input_bytes(df: DataFrame) -> int:
+    """Total size of the plan's local input files; files that are not
+    local (or cannot be stat'ed) count as 0."""
+    try:
+        files = df.inputFiles()
+    except Exception:
+        return 0
+    total = 0
+    for p in files:
+        parsed = urlparse(p)
+        if parsed.scheme in ("file", ""):
+            try:
+                total += os.stat(parsed.path or p).st_size
+            except OSError:
+                pass
+    return total
+
+
 def _stats_source(df: DataFrame, sample: bool | None) -> tuple[DataFrame, float]:
     """(stats frame, count multiplier) for the routing stats passes.
     ``sample=None`` auto-engages the 1% sample above STATS_SAMPLE_BYTES
     of (local) input; True/False force it either way (tests pin
     sample-vs-full routing agreement on the skew anchor)."""
     if sample is None:
-        total = 0
-        for _, size, _ in _files_sig(df):
-            total += max(size, 0)
-        sample = total > STATS_SAMPLE_BYTES
+        sample = _input_bytes(df) > STATS_SAMPLE_BYTES
     if not sample:
         return df, 1.0
     return (
@@ -1165,9 +1080,8 @@ def hot_entity_cuts(
     sample: bool | None = None,
 ) -> HotBucketSpec | None:
     """Detect entities whose row count would serialize a single task and
-    compute their fixed-width time cuts (one groupBy job, memoized per
-    input files like :func:`estimate_frame_rows`; driver result bounded
-    by ``cap``). The span is padded by the widest window so shadow
+    compute their fixed-width time cuts (one groupBy job; driver result
+    bounded by ``cap``). The span is padded by the widest window so shadow
     probes (ms − W) and interval markers (ms + W + 1) land inside the
     cut range; the bucket expression clamps anyway, which only affects
     balance, never correctness (bucket id stays monotone in ms).
@@ -1181,14 +1095,6 @@ def hot_entity_cuts(
     correctness surface: any (lo, width) yields bit-identical results
     (pytest-pinned), so sampling noise only moves bucket edges."""
     stats_df, inv = _stats_source(df, sample)
-    files = _files_sig(df)
-    key = (
-        (files, entity_col, ts_col, window_max_s, min_rows, buckets, cap, inv)
-        if files
-        else None
-    )
-    if key is not None and key in _HOT_CUTS_CACHE:
-        return _HOT_CUTS_CACHE[key]
     ms_col = F.unix_millis(F.col(ts_col))
     rows = (
         stats_df.groupBy(entity_col)
@@ -1203,19 +1109,15 @@ def hot_entity_cuts(
         .collect()
     )
     if not rows:
-        spec = None
-    else:
-        pad = window_max_s * 1000 + 1
-        ents = {}
-        for r in rows:
-            lo = int(r["mn"]) - pad
-            hi = int(r["mx"]) + pad + 1
-            width = max(1, (hi - lo + buckets - 1) // buckets)
-            ents[r[entity_col]] = (lo, width)
-        spec = HotBucketSpec(buckets=buckets, ents=ents)
-    if key is not None:
-        _cache_put(_HOT_CUTS_CACHE, key, spec, _STATS_CACHE_CAP)
-    return spec
+        return None
+    pad = window_max_s * 1000 + 1
+    ents = {}
+    for r in rows:
+        lo = int(r["mn"]) - pad
+        hi = int(r["mx"]) + pad + 1
+        width = max(1, (hi - lo + buckets - 1) // buckets)
+        ents[r[entity_col]] = (lo, width)
+    return HotBucketSpec(buckets=buckets, ents=ents)
 
 
 def estimate_frame_rows(
@@ -1241,15 +1143,8 @@ def estimate_frame_rows(
     dropped (they cannot cross a routing threshold, and scaling a
     1-row sample would fabricate density), and the shrunk sample span
     only OVERestimates density — erring toward the O(rows) plan, the
-    safe direction since both strategies are bit-identical. Memoized
-    per (input files+sizes+mtimes, entity, window) for the session —
-    same contract as the persisted-index cache: the routing statistic
-    of a static input never changes, so repeated queries pay it once."""
+    safe direction since both strategies are bit-identical."""
     stats_df, inv = _stats_source(df, sample)
-    files = _files_sig(df)
-    cache_key = (files, entity_col, ts_col, window_s, inv) if files else None
-    if cache_key is not None and cache_key in _FRAME_EST_CACHE:
-        return _FRAME_EST_CACHE[cache_key]
     ms_col = F.unix_millis(F.col(ts_col))
     per = stats_df.groupBy(entity_col).agg(
         F.count(F.lit(1)).alias("c"),
@@ -1268,10 +1163,7 @@ def estimate_frame_rows(
             )
         ).alias("hot")
     ).first()
-    est = float(stats["hot"] or 0.0)
-    if cache_key is not None:
-        _cache_put(_FRAME_EST_CACHE, cache_key, est, _STATS_CACHE_CAP)
-    return est
+    return float(stats["hot"] or 0.0)
 
 
 def trailing_features_auto(
@@ -1293,7 +1185,7 @@ def trailing_features_auto(
     windowed distincts (per-frame HLL is not marker-decomposable); exact
     distincts ride the scalable plan's interval markers.
 
-    On the scalable path a second memoized stats pass
+    On the scalable path a second stats pass
     (:func:`hot_entity_cuts`) checks for entities big enough to
     serialize one task (``hot_rows_threshold``); those are
     time-bucketized so their windows parallelize across the cluster —

@@ -73,7 +73,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 DEFAULT_WINDOWS = {"5m": 300, "1h": 3600}
-DEFAULT_BUCKETS = int(os.environ.get("SPARK_GRAFT_STATE_BUCKETS", "256"))
+DEFAULT_BUCKETS = 256
 
 # composite key = entity_idx * 2^34 + (ts_ms − per-entity base): 2^34 ms
 # ≈ 199 days of offset per entity segment, 2^63 / 2^34 ≈ 5.4e8 entities
@@ -621,15 +621,13 @@ def _adaptive_buckets(source_dir: str) -> int:
     mid-size probe (1M events, 140 buckets) measured ~6% WORSE than 256,
     so this only shrinks where the win is proven, and the parallelism
     story at real scale (buckets = the knob, raised to fit executor
-    memory) is unchanged. Explicit ``n_buckets`` args and the
-    ``SPARK_GRAFT_STATE_BUCKETS`` env override bypass it entirely."""
+    memory) is unchanged. Explicit ``n_buckets`` args bypass it, and a
+    directory with no parquet under it keeps the default."""
     import glob as _g
 
-    size = sum(
-        os.path.getsize(p)
-        for p in _g.glob(os.path.join(source_dir, "**", "*.parquet"), recursive=True)
-    )
-    if size >= _SMALL_INPUT_BYTES:
+    paths = _g.glob(os.path.join(source_dir, "**", "*.parquet"), recursive=True)
+    size = sum(os.path.getsize(p) for p in paths)
+    if not paths or size >= _SMALL_INPUT_BYTES:
         return DEFAULT_BUCKETS
     return max(16, min(DEFAULT_BUCKETS, -(-size // _BUCKET_BYTES)))
 
@@ -664,11 +662,7 @@ def run_bounded(
 
     from ..sources.tables import stream_events
 
-    n_buckets = (
-        None  # per_event_features applies the env/default
-        if "SPARK_GRAFT_STATE_BUCKETS" in os.environ
-        else _adaptive_buckets(source_dir)
-    )
+    n_buckets = _adaptive_buckets(source_dir)
     events = stream_events(spark, source_dir, max_files_per_trigger)
     out = per_event_features(events, windows, n_buckets=n_buckets, extended=extended)
     ckpt = _run_tmpdir("ckpt_per_event_")
@@ -682,12 +676,9 @@ def run_bounded(
     # a state-store commit per micro-batch (r12; only ever SHRINKS, and
     # only for small bounded replays — each run has a fresh checkpoint,
     # so the state-partition count pin is per-run)
-    eff_buckets = n_buckets or DEFAULT_BUCKETS
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = spark.sparkContext.defaultParallelism
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(min(cores, eff_buckets))
-    )
+    spark.conf.set("spark.sql.shuffle.partitions", str(min(cores, n_buckets)))
     try:
         q = (
             out.writeStream.outputMode("append")

@@ -114,7 +114,7 @@ def test_exact_collapse_pairs_equal_uncollapsed(spark):
     assert all(got[i] == (0, i == 0) for i in (0, 1, 2, 3, 4))
 
 
-def test_exact_dup_guard_skips_collapse_when_uniform(spark, monkeypatch):
+def test_exact_dup_guard_skips_collapse_when_uniform(spark, monkeypatch, tmp_path):
     """r9 (VERDICT #4): a corpus with no exact duplicates must route
     around the pre-collapse (guard returns False) with output identical
     to the collapse path (guard forced True) — so the guard is purely a
@@ -133,6 +133,13 @@ def test_exact_dup_guard_skips_collapse_when_uniform(spark, monkeypatch):
         [(0, None), (1, None)], "doc_id long, text string"
     )
     assert dedup._has_exact_dups(dn) is True
+    # a subset of a corpus checked first must not decide for the corpus
+    # read from the same files
+    path = str(tmp_path / "docs")
+    _docs(spark, texts + [texts[0]]).write.parquet(path)
+    docs = spark.read.parquet(path)
+    assert dedup._has_exact_dups(docs.filter(F.col("doc_id") < 1)) is False
+    assert dedup._has_exact_dups(docs) is True
 
     fast_pairs = {
         (r["d1"], r["d2"]): (r["est_sim"], r["jaccard"])

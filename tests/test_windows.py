@@ -628,9 +628,66 @@ def test_routing_stats_sample_agrees_with_full(spark):
     assert abs(lo_s - lo_f) < 600_000 and abs(w_s - w_f) < 600_000
 
 
+def test_filtered_view_after_full_frame_same_files(spark, tmp_path):
+    """Routing stats, hot cuts and bucket carries come from the frame
+    passed in, not from an earlier call over the same files: after the
+    hot-bucketed plan ran on the full log, a filtered view of it must
+    still equal trailing_features on that view, and its stats must equal
+    the stats of an independent copy of the view's rows."""
+    import shutil
+
+    from aml_feature_store_spark.operators.windows import (
+        estimate_frame_rows,
+        hot_entity_cuts,
+        trailing_features_scalable,
+    )
+    from aml_feature_store_spark.sources import load_table
+
+    src = tmp_path / "src"
+    src.mkdir()
+    shutil.copy("/root/testdata/sf0.001/events.parquet", src)
+    full = load_table(spark, str(src), "events")
+    view = full.filter(F.col("value") > 50)
+    spec = TrailingWindowSpec(windows={"5m": 300, "1h": 3600, "24h": 86400})
+    cols = ["event_id"] + [
+        f"{m}_{w}"
+        for w in spec.windows
+        for m in (
+            "txn_count", "txn_amount_sum", "avg_txn_amount",
+            "max_txn_amount", "min_txn_amount", "std_txn_amount",
+            "velocity_score",
+        )
+    ]
+
+    def run(df):
+        hb = hot_entity_cuts(df, "user_id", "ts", 86400, min_rows=3,
+                             buckets=4, cap=1000)
+        est = estimate_frame_rows(df, "user_id", "ts", 86400)
+        out = trailing_features_scalable(df, spec, hot_buckets=hb)
+        return hb, est, {r["event_id"]: r for r in out.select(*cols).collect()}
+
+    hb_full, est_full, _ = run(full)
+    hb, est, got = run(view)
+
+    want = {r["event_id"]: r
+            for r in trailing_features(view, spec).select(*cols).collect()}
+    assert set(got) == set(want) and 0 < len(want) < 1000
+    for eid, rw in want.items():
+        for c in cols:
+            assert got[eid][c] == rw[c], (eid, c, got[eid][c], rw[c])
+
+    view.write.parquet(str(tmp_path / "view"))
+    cold = spark.read.parquet(str(tmp_path / "view"))
+    assert hb is not None and hb != hb_full
+    assert hb == hot_entity_cuts(cold, "user_id", "ts", 86400, min_rows=3,
+                                 buckets=4, cap=1000)
+    assert est != est_full
+    assert est == estimate_frame_rows(cold, "user_id", "ts", 86400)
+
+
 def test_stats_cache_invalidates_on_inplace_rewrite(spark, tmp_path):
-    """Memoized routing stats key on (path, size, mtime): rewriting data
-    at the SAME path must invalidate, not silently reuse stale stats."""
+    """Routing stats are recomputed on every call: rewriting data at the
+    SAME path must give the new data's stats, not an earlier result."""
     import time as _time
 
     import pyarrow as pa
@@ -667,13 +724,9 @@ def test_stats_cache_invalidates_on_inplace_rewrite(spark, tmp_path):
 
 
 def test_plan_cache_bounds_and_jdiv():
-    """FIFO cache bound + Spark-div arithmetic helpers (pure python)."""
-    from aml_feature_store_spark.operators.windows import _cache_put, _jdiv
+    """Spark-div arithmetic helper of the carry fold (pure python)."""
+    from aml_feature_store_spark.operators.windows import _jdiv
 
-    c: dict = {}
-    for i in range(40):
-        _cache_put(c, i, i, 8)
-    assert len(c) == 8 and 39 in c and 0 not in c
     # trunc-toward-zero vs floor: differs on negatives
     assert _jdiv(7, 2) == 3 and _jdiv(-7, 2) == -3 and (-7) // 2 == -4
     assert _jdiv(-86400001, 3600000) == -24
